@@ -3210,12 +3210,12 @@ def _q_contains_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MaxScore term-pruned top-k (tsidx/maxscore.py) — bit-identical to
-    the naive BM25 plan by construction (safe term pruning: skipped docs
-    carry only non-essential terms whose bounds sum below θ), so it
-    shares bm25_topk's oracle SQL. ``small_candidate_limit=0`` forces
-    the seed/partition/prune path so the gate exercises the pruning
-    machinery, not the fast path."""
+    """MaxScore top-k (tsidx/maxscore.py) — runs the block-max WAND core
+    (MaxScore's term rule never prunes a block WAND's block rule keeps, so
+    the name maps to ``wand_topk``); bit-identical to the naive BM25 plan
+    by construction, so it shares bm25_topk's oracle SQL.
+    ``small_candidate_limit=0`` forces the seed/θ/prune path so the gate
+    exercises the pruning machinery, not the fast path."""
     from tsidx.maxscore import maxscore_topk
 
     idx = get_index(spark, sf_dir)

@@ -3,9 +3,10 @@
     python jobs/query_topk.py --index /tmp/idx --query "fire heat" -k 10 \
         --engine wand --parallelism 8
 
-Engines: ``naive`` (Catalyst join+agg+TakeOrdered plan), ``wand``
-(block-max pruned, tsidx.wand) and ``maxscore`` (term-pruned,
-tsidx.maxscore) — all rank- and score-identical by construction.
+Engines: ``naive`` (Catalyst join+agg+TakeOrdered plan) and ``wand``
+(block-max pruned, tsidx.wand) — rank- and score-identical by
+construction. ``maxscore`` is kept as a name for ``wand``: MaxScore's term
+rule never prunes a block the block rule keeps (tsidx/maxscore.py).
 ``--mode match`` runs the reference's disjunctive boolean retrieval instead
 (results in docID order, ``ts_type_filter/inverted_index.py:71-101``).
 """

@@ -1,5 +1,6 @@
-"""MaxScore rank-identity tests: term-pruned top-k vs naive plan vs oracle,
-plus a pruning-effectiveness check on a stopword-dominated query."""
+"""MaxScore rank-identity tests: top-k vs naive plan vs oracle, on a seeded
+generated corpus and on the reference sonnets (skipped when the reference
+is absent), plus stopword-dominated and tombstoned queries."""
 
 from __future__ import annotations
 
@@ -10,31 +11,55 @@ from tsidx.maxscore import maxscore_topk
 from tsidx.oracle import OracleIndex
 from tsidx.query import QueryEngine
 
-QUERIES = [
-    "same",
-    "thrall quench",
-    "fire heat",
-    "love beauty time",
-    "the and of",  # hot terms — bounds sum high, little term pruning
-    "thrall the and of sonnet",  # one rare term + stopwords: MaxScore's win
-    "nonexistentterm",
-    "sonnet",  # df == n_docs
-]
+QUERIES = {
+    "generated": [
+        "ember",  # single term
+        "harbor lantern glacier",
+        "the and of",  # hot terms only
+        "zzrare the and of",  # one rare term + stopwords
+        "nonexistentterm",
+        "turn",  # df == n_docs
+    ],
+    "sonnets": [
+        "same",
+        "thrall quench",
+        "fire heat",
+        "love beauty time",
+        "the and of",  # hot terms — bounds sum high, little term pruning
+        "thrall the and of sonnet",  # one rare term + stopwords
+        "nonexistentterm",
+        "sonnet",  # df == n_docs
+    ],
+}
+NAIVE_QUERIES = {
+    "generated": ["harbor lantern glacier", "zzrare the and of"],
+    "sonnets": ["fire heat", "thrall the and of"],
+}
 
 
-@pytest.fixture(scope="module")
-def built(spark, sonnets_transcripts, sonnets):
-    idx = build_index(sonnets_transcripts, block_size=16)  # many blocks
+def cases(queries: dict[str, list[str]]) -> list[tuple[str, str]]:
+    return [(corpus, q) for corpus, qs in queries.items() for q in qs]
+
+
+@pytest.fixture(scope="module", params=sorted(QUERIES))
+def built(request, spark):
+    corpus = request.param
+    texts = request.getfixturevalue(corpus)
+    idx = build_index(
+        request.getfixturevalue(f"{corpus}_transcripts"), block_size=16
+    )  # many blocks
     oracle = OracleIndex()
-    oracle.add_corpus(sonnets)
-    return idx, oracle
+    oracle.add_corpus(texts)
+    return corpus, idx, oracle
 
 
 @pytest.mark.parametrize("limit", [0, 200_000], ids=["pruned-path", "fast-path"])
-@pytest.mark.parametrize("query", QUERIES)
-@pytest.mark.parametrize("k", [1, 10, 200])
+@pytest.mark.parametrize("k", [0, 1, 10, 200])
+@pytest.mark.parametrize(
+    "built,query", cases(QUERIES), indirect=["built"], scope="module"
+)
 def test_maxscore_rank_identical_to_oracle(built, query, k, limit):
-    idx, oracle = built
+    _, idx, oracle = built
     got = [
         (r["doc_id"], r["score"])
         for r in maxscore_topk(
@@ -47,11 +72,13 @@ def test_maxscore_rank_identical_to_oracle(built, query, k, limit):
         assert s1 == s2, (query, d1, s1, s2)  # bit-identical
 
 
-@pytest.mark.parametrize("query", ["fire heat", "thrall the and of"])
+@pytest.mark.parametrize(
+    "built,query", cases(NAIVE_QUERIES), indirect=["built"], scope="module"
+)
 def test_maxscore_matches_naive_and_wand(built, query):
     from tsidx.wand import wand_topk
 
-    idx, _ = built
+    _, idx, _ = built
     eng = QueryEngine(idx)
     naive = [
         (r["doc_id"], r["score"]) for r in eng.bm25_topk(query, 25).collect()
@@ -67,6 +94,29 @@ def test_maxscore_matches_naive_and_wand(built, query):
     assert naive == ms == wd
 
 
+@pytest.mark.parametrize(
+    "built,query", cases(NAIVE_QUERIES), indirect=["built"], scope="module"
+)
+@pytest.mark.parametrize("k", [3, 10])
+def test_maxscore_with_tombstones(built, query, k):
+    """Logically deleted docs leave the page; every other score is unchanged
+    (corpus statistics are not recomputed until the physical apply)."""
+    from tsidx.deletes import delete_docs
+
+    _, idx, oracle = built
+    deleted = {d for d, _ in oracle.bm25_topk(query, 3)}  # the page's head
+    got = [
+        (r["doc_id"], r["score"])
+        for r in maxscore_topk(
+            delete_docs(idx, sorted(deleted)), query, k, small_candidate_limit=0
+        ).collect()
+    ]
+    want = [
+        p for p in oracle.bm25_topk(query, k + len(deleted)) if p[0] not in deleted
+    ][:k]
+    assert got == want
+
+
 def test_maxscore_array_codec(spark, sonnets_transcripts, sonnets):
     idx = build_index(sonnets_transcripts, block_size=32, codec="array")
     oracle = OracleIndex()
@@ -80,10 +130,10 @@ def test_maxscore_array_codec(spark, sonnets_transcripts, sonnets):
     assert got == oracle.bm25_topk("fire heat", 10)
 
 
-def test_maxscore_prunes_stopword_terms(spark, sonnets):
+def test_maxscore_prunes_stopword_terms(spark):
     """On a corpus where one rare term dominates and stopwords are cheap,
-    the essential set must shrink below the full query — candidate blocks
-    are restricted to those holding the essential (rare) term."""
+    the page must hold only docs carrying the rare term: blocks holding
+    only stopword postings bound below θ and are never scored."""
     import datetime
 
     base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
@@ -122,5 +172,5 @@ def test_maxscore_prunes_stopword_terms(spark, sonnets):
 
 
 def test_maxscore_empty_query(built):
-    idx, _ = built
+    _, idx, _ = built
     assert maxscore_topk(idx, "", 10).collect() == []

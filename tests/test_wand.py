@@ -1,4 +1,6 @@
-"""Block-max WAND rank-identity tests: WAND vs naive plan vs oracle."""
+"""Block-max WAND rank-identity tests: WAND vs naive plan vs oracle, on a
+seeded generated corpus and on the reference sonnets (skipped when the
+reference is absent)."""
 
 from __future__ import annotations
 
@@ -9,30 +11,54 @@ from tsidx.oracle import OracleIndex
 from tsidx.query import QueryEngine
 from tsidx.wand import wand_topk
 
-QUERIES = [
-    "same",
-    "thrall quench",
-    "fire heat",
-    "love beauty time",
-    "the and of",  # hot terms — every block is a candidate
-    "nonexistentterm",
-    "sonnet",  # df == n_docs
-]
+QUERIES = {
+    "generated": [
+        "ember",  # single term
+        "harbor lantern glacier",
+        "the and of",  # hot terms only
+        "zzrare the and of",  # one rare term + stopwords
+        "nonexistentterm",
+        "turn",  # df == n_docs
+    ],
+    "sonnets": [
+        "same",
+        "thrall quench",
+        "fire heat",
+        "love beauty time",
+        "the and of",  # hot terms — every block is a candidate
+        "nonexistentterm",
+        "sonnet",  # df == n_docs
+    ],
+}
+NAIVE_QUERIES = {
+    "generated": ["harbor lantern glacier", "zzrare the and of"],
+    "sonnets": ["fire heat", "love beauty time"],
+}
 
 
-@pytest.fixture(scope="module")
-def built(spark, sonnets_transcripts, sonnets):
-    idx = build_index(sonnets_transcripts, block_size=16)  # many blocks
+def cases(queries: dict[str, list[str]]) -> list[tuple[str, str]]:
+    return [(corpus, q) for corpus, qs in queries.items() for q in qs]
+
+
+@pytest.fixture(scope="module", params=sorted(QUERIES))
+def built(request, spark):
+    corpus = request.param
+    texts = request.getfixturevalue(corpus)
+    idx = build_index(
+        request.getfixturevalue(f"{corpus}_transcripts"), block_size=16
+    )  # many blocks
     oracle = OracleIndex()
-    oracle.add_corpus(sonnets)
-    return idx, oracle
+    oracle.add_corpus(texts)
+    return corpus, idx, oracle
 
 
 @pytest.mark.parametrize("limit", [0, 200_000], ids=["pruned-path", "fast-path"])
-@pytest.mark.parametrize("query", QUERIES)
-@pytest.mark.parametrize("k", [1, 10, 200])
+@pytest.mark.parametrize("k", [0, 1, 10, 200])
+@pytest.mark.parametrize(
+    "built,query", cases(QUERIES), indirect=["built"], scope="module"
+)
 def test_wand_rank_identical_to_oracle(built, query, k, limit):
-    idx, oracle = built
+    _, idx, oracle = built
     got = [
         (r["doc_id"], r["score"])
         for r in wand_topk(idx, query, k, small_candidate_limit=limit).collect()
@@ -43,9 +69,11 @@ def test_wand_rank_identical_to_oracle(built, query, k, limit):
         assert s1 == s2, (query, d1, s1, s2)  # bit-identical
 
 
-@pytest.mark.parametrize("query", ["fire heat", "love beauty time"])
+@pytest.mark.parametrize(
+    "built,query", cases(NAIVE_QUERIES), indirect=["built"], scope="module"
+)
 def test_wand_matches_naive_plan(built, query):
-    idx, _ = built
+    _, idx, _ = built
     eng = QueryEngine(idx)
     naive = [(r["doc_id"], r["score"]) for r in eng.bm25_topk(query, 25).collect()]
     wand = [(r["doc_id"], r["score"]) for r in wand_topk(idx, query, 25).collect()]
@@ -60,7 +88,7 @@ def test_wand_array_codec(spark, sonnets_transcripts, sonnets):
     assert got == oracle.bm25_topk("fire heat", 10)
 
 
-def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
+def test_wand_no_driver_scale_collect(spark, generated, monkeypatch):
     """Survivor selection must stay a DataFrame plan: with >= 10^4 posting
     blocks, no single driver collect during wand_topk may return more than
     O(seed_factor * k) rows (regression: per-block metadata collect + giant
@@ -68,7 +96,7 @@ def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
     import datetime
 
     base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
-    texts = [t for rep in range(80) for t in sonnets]  # 12,320 docs
+    texts = [t for rep in range(31) for t in generated]  # 12,400 docs
     rows = [
         (f"r{i // 16:05d}", i % 16, "user", t, "", base)
         for i, t in enumerate(texts)
@@ -77,7 +105,7 @@ def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     ).repartition(16)
-    idx = build_index(df, block_size=1)  # one doc per block -> 12,320 blocks
+    idx = build_index(df, block_size=1)  # one doc per block -> 12,400 blocks
     n_blocks = idx.postings.select("block_id").distinct().count()
     assert n_blocks >= 10_000
 
@@ -95,7 +123,7 @@ def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
     got = [
         (r["doc_id"], r["score"])
         for r in real_collect(
-            wand_topk(idx, "fire heat", k, seed_factor=seed_factor,
+            wand_topk(idx, "harbor lantern", k, seed_factor=seed_factor,
                       small_candidate_limit=0)
         )
     ]
@@ -106,10 +134,10 @@ def test_wand_no_driver_scale_collect(spark, sonnets, monkeypatch):
 
     oracle = OracleIndex()
     oracle.add_corpus(texts)
-    assert got == oracle.bm25_topk("fire heat", k)
+    assert got == oracle.bm25_topk("harbor lantern", k)
 
 
-def test_wand_tie_break_with_duplicate_docs(spark, sonnets):
+def test_wand_tie_break_with_duplicate_docs(spark, generated):
     """Replicated corpus -> exact score ties; tie-break must be ascending
     doc_id (regression: argpartition picked arbitrary tied docs)."""
     import datetime
@@ -117,7 +145,7 @@ def test_wand_tie_break_with_duplicate_docs(spark, sonnets):
     from tsidx.oracle import OracleIndex
 
     base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
-    texts = [t for rep in range(4) for t in sonnets[:40]]
+    texts = [t for rep in range(4) for t in generated[:40]]
     rows = [
         (f"r{i // 10:04d}", i % 10, "user", t, "", base)
         for i, t in enumerate(texts)
@@ -129,12 +157,40 @@ def test_wand_tie_break_with_duplicate_docs(spark, sonnets):
     idx = build_index(df, block_size=32)
     oracle = OracleIndex()
     oracle.add_corpus(texts)
-    for q in ["fire heat", "love beauty time", "the and of"]:
+    for q in ["harbor lantern", "ember meadow signal", "the and of", "turn"]:
         for k in (3, 10, 50):
             got = [
                 (r["doc_id"], r["score"]) for r in wand_topk(idx, q, k).collect()
             ]
             assert got == oracle.bm25_topk(q, k), (q, k)
+
+
+# per corpus: a batch whose "q_unknown" query has no indexed term; a hot
+# (df == n_docs) and a cold query; a tombstone case (batch, deleted docs)
+BATCHES = {
+    "generated": {
+        "q_ember": "ember",
+        "q_hlg": "harbor lantern glacier",
+        "q_rare": "zzrare the and of",
+        "q_hot": "the and of",
+        "q_unknown": "zzzunknown",
+    },
+    "sonnets": {
+        "q_same": "same",
+        "q_tq": "thrall quench",
+        "q_fh": "fire heat",
+        "q_lf": "love fire",
+        "q_unknown": "zzzunknown",
+    },
+}
+HOT_COLD = {
+    "generated": {"hot": "turn", "cold": "zzrare"},  # df=400 vs df=5
+    "sonnets": {"hot": "sonnet", "cold": "thrall"},  # df=154 vs tiny df
+}
+TOMBSTONES = {
+    "generated": ({"a": "zzrare", "b": "harbor lantern glacier"}, [294, 3, 237, 178]),
+    "sonnets": ({"a": "same", "b": "fire heat"}, [4, 49, 11, 44]),
+}
 
 
 class TestWandBatch:
@@ -143,14 +199,8 @@ class TestWandBatch:
     def test_batch_pages_bit_identical(self, built):
         from tsidx.wand import wand_topk_batch
 
-        idx, oracle = built
-        batch = {
-            "q_same": "same",
-            "q_tq": "thrall quench",
-            "q_fh": "fire heat",
-            "q_lf": "love fire",
-            "q_unknown": "zzzunknown",
-        }
+        corpus, idx, oracle = built
+        batch = BATCHES[corpus]
         k = 10
         got = {}
         for r in wand_topk_batch(idx, batch, k).collect():
@@ -166,26 +216,25 @@ class TestWandBatch:
     def test_batch_k1_and_hot_query(self, built):
         from tsidx.wand import wand_topk_batch
 
-        idx, oracle = built
-        batch = {"hot": "sonnet", "cold": "thrall"}  # df=154 vs tiny df
-        for k in (1, 3):
+        corpus, idx, oracle = built
+        batch = HOT_COLD[corpus]
+        for k in (0, 1, 3):
             got = {}
             for r in wand_topk_batch(idx, batch, k).collect():
                 got.setdefault(r["query_id"], []).append(
                     (r["doc_id"], r["score"])
                 )
             for qid, q in batch.items():
-                rows = sorted(got[qid], key=lambda t: (-t[1], t[0]))
+                rows = sorted(got.get(qid, []), key=lambda t: (-t[1], t[0]))
                 assert rows == oracle.bm25_topk(q, k), (qid, k)
 
     def test_batch_with_tombstones(self, built):
         from tsidx.deletes import delete_docs
         from tsidx.wand import wand_topk, wand_topk_batch
 
-        idx, _oracle = built
-        deleted = [4, 49, 11, 44]
+        corpus, idx, _oracle = built
+        batch, deleted = TOMBSTONES[corpus]
         idx2 = delete_docs(idx, deleted)
-        batch = {"a": "same", "b": "fire heat"}
         got = {}
         for r in wand_topk_batch(idx2, batch, 5).collect():
             got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))

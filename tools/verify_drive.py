@@ -1,7 +1,7 @@
 """Build-and-drive verification (the /verify recipe, scripted):
 1. OracleIndex over the runtime-loaded reference sonnets corpus -> golden
    statistics, document frequencies, and match sets.
-2. entry(spark) smoke (>=0 rows, stable schema) on local[4].
+2. entry(spark) smoke (>0 rows, stable schema) on local[4].
 3. Spark engine vs oracle rank identity: same queries -> same doc_ids and
    bit-identical BM25 scores.
 4. jobs/build_index.py one-shot at sf0.001.
@@ -47,7 +47,7 @@ def main():
     espec.loader.exec_module(se)
     df = se.entry(spark)
     rows = df.collect()
-    assert len(rows) >= 0
+    assert len(rows) > 0, "entry() returned no rows"
     print(f"[2/4] entry() smoke OK: {len(rows)} rows,"
           f" schema {df.schema.simpleString()}")
 

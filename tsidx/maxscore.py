@@ -1,192 +1,32 @@
-"""MaxScore top-k: term-centric dynamic pruning with a bounded heap.
+"""MaxScore top-k: runs the block-max WAND core (`tsidx/wand.py`).
 
 Turtle & Flood, "Query evaluation: strategies and optimizations" (IP&M
-1995). Where block-max WAND (`tsidx/wand.py`) prunes *blocks* whose
-summed upper bound falls below θ, MaxScore prunes *terms*: sort the
-query's terms by their global maximum BM25 contribution, and call the
-largest ascending prefix whose bounds sum to < θ **non-essential** — a
-document containing only non-essential terms can never reach the top-k,
-so candidate enumeration is restricted to postings of the **essential**
-terms. Classic win: one rare term + several stopwords degenerates to a
-rare-term lookup, while WAND still aggregates per-block bounds across
-the stopwords' dense block lists.
+1995). MaxScore prunes *terms*: sort the query's terms by their global
+bound ``UB_t = idf_t · max over blocks of wtf(max_tf, min_dl)``, call the
+largest ascending prefix whose bounds sum to < θ − ε **non-essential**, and
+score only blocks that hold an essential term's posting.
 
-Spark-first realization:
+Given the same seeds and θ, that term rule never prunes a block the block
+rule of ``wand_topk`` keeps. A block whose postings all belong to
+non-essential terms has ``UB = Σ_t idf_t · wtf_block(t) ≤ Σ_{non-essential}
+UB_t < θ − ε``, so WAND drops it as well; every block WAND keeps therefore
+holds an essential term. Both engines pick their seed blocks from the same
+per-block UBs and so reach the same θ — a MaxScore engine would score a
+superset of WAND's survivor blocks and pay an extra per-term bound collect
+(12 Spark jobs per pruned query against WAND's 9). The rare-term +
+stopwords case is no exception: a stopword-only block's UB is below θ too,
+so WAND also scores only the rare term's blocks.
 
-1. **Per-term bounds.** ``UB_t = idf_t · max over blocks of
-   wtf(max_tf, min_dl)`` — ONE metadata-only aggregation, |q| rows
-   collected (the per-block bound is monotone in tf and anti-monotone in
-   dl, so the block-wise max bounds every posting of the term; taking
-   the max of per-block bounds is tighter than a single global
-   (max_tf, min_dl) pair).
-2. **Seed θ.** Exactly score the highest-UB block groups (same bounded
-   choreography as WAND: blocks cover ≥ seed_factor·k candidates); θ =
-   the k-th best seed score. Scores are complete within a group because
-   a doc's postings for all terms share its ``block_id``.
-3. **Term partition.** Ascending-UB prefix with ``Σ UB < θ − ε`` is
-   non-essential. Candidate blocks = DISTINCT ``block_id`` of the
-   essential terms' posting rows — metadata only, no payload decode.
-4. **Score.** All-terms candidate postings semi-join the candidate
-   block set, ``applyInPandas`` block scorer (shared with WAND →
-   bit-identical contributions), TakeOrdered merge with the seed page.
-
-Safety: a skipped doc appears in no essential term's postings, so its
-score ≤ Σ_{non-essential} UB_t < θ ≤ final k-th score. Every kept doc is
-scored exactly; ties break by ascending doc_id; results are
-bit-identical to ``QueryEngine.bm25_topk`` and the single-node oracle.
-
-At 10^12 docs the driver holds only |q| term bounds plus the bounded
-seed rows; candidate selection is a broadcast semi-join on the (≤ ~10^6
-row) block-id set, and the posting scan is pruned to the query's terms
-(pushed ``term IN``) exactly like the naive engine.
+``maxscore_topk`` is therefore the same function as
+:func:`tsidx.wand.wand_topk` — same signature
+``(index, query, k, seed_factor=4, small_candidate_limit=200_000)``, same
+pages (bit-identical to ``QueryEngine.bm25_topk`` and the oracle). The name
+stays for its callers: ``QueryEngine.maxscore_topk``, ``jobs/query_topk.py
+--engine maxscore`` and the ``maxscore_topk`` gate entry.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from tsidx.index import InvertedIndex
-from tsidx.oracle import bm25_idf
-from tsidx.wand import _SCORE_SCHEMA, _make_group_scorer
+from tsidx.wand import wand_topk as maxscore_topk
 
 __all__ = ["maxscore_topk"]
-
-
-def maxscore_topk(
-    index: InvertedIndex,
-    query: str | list[str],
-    k: int,
-    seed_factor: int = 4,
-    small_candidate_limit: int = 200_000,
-) -> DataFrame:
-    """Deterministic BM25 top-k with MaxScore term pruning; returns
-    (doc_id, score) ordered by (-score, doc_id), bit-identical to
-    ``QueryEngine.bm25_topk`` / ``wand_topk`` / the oracle."""
-    from tsidx.ship import ensure_shipped
-    from tsidx.tokenize import query_terms
-
-    spark = index.docs.sparkSession
-    ensure_shipped(spark)
-    terms = query_terms(query)
-    n = index.meta["n_docs"]
-    rows = (
-        index.terms.filter(F.col("term").isin(terms)).collect() if terms else []
-    )
-    idfs = {r["term"]: bm25_idf(n, r["df"]) for r in rows}
-    if not idfs:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
-    k1, b = float(index.meta["k1"]), float(index.meta["b"])
-    avgdl = float(index.meta["avgdl"])
-    block_size = int(index.meta["block_size"])
-    codec = index.meta["codec"]
-
-    cand = index.postings.filter(F.col("term").isin(sorted(idfs)))
-    if index.tombstones is not None:
-        dead_by_block = (
-            index.tombstones.select(
-                "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
-            )
-            .groupBy("block_id")
-            .agg(F.collect_list("doc_id").alias("_dead"))
-        )
-        cand = cand.join(dead_by_block, "block_id", "left")
-    scorer = _make_group_scorer(idfs, k, k1, b, avgdl, block_size, codec)
-    total_cand = sum(r["df"] for r in rows if r["term"] in idfs)
-    if total_cand <= small_candidate_limit:
-        # same fast path as WAND: below this size the seed/prune
-        # choreography costs more than one exact pass
-        return (
-            cand.groupBy("block_id")
-            .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    max_tf = F.col("max_tf").cast("double")
-    min_dl = F.col("min_dl").cast("double")
-    bound_wtf = (max_tf * F.lit(k1 + 1.0)) / (
-        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
-    )
-    idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
-
-    # |q|-row per-term bound table (block-wise max of the bound — tighter
-    # than one global (max_tf, min_dl) pair) + per-block UBs for seeding.
-    # One metadata-only pass feeds both; checkpointed like WAND's ub_df.
-    meta_df = cand.select(
-        "term",
-        "block_id",
-        "block_df",
-        (idf_map[F.col("term")] * bound_wtf).alias("bound"),
-    ).localCheckpoint()
-    term_ub = {
-        r["term"]: r["ub"]
-        for r in meta_df.groupBy("term").agg(F.max("bound").alias("ub")).collect()
-    }
-    ub_df = meta_df.groupBy("block_id").agg(
-        F.sum("bound").alias("ub"), F.sum("block_df").alias("cand_count")
-    )
-
-    # bounded seed collect (WAND's choreography): top-UB blocks cover the
-    # seed quota because every block holds >= 1 candidate posting
-    seed_rows = (
-        ub_df.orderBy(F.desc("ub"), F.asc("block_id"))
-        .limit(seed_factor * k)
-        .collect()
-    )
-    seed_ids, seen = [], 0
-    for r in seed_rows:
-        seed_ids.append(r["block_id"])
-        seen += r["cand_count"]
-        if seen >= seed_factor * k:
-            break
-    seed_scores = (
-        cand.filter(F.col("block_id").isin(seed_ids))
-        .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-    )
-    seed_top = (
-        seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    )
-    seed_df = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in seed_top] or [], _SCORE_SCHEMA
-    )
-
-    essential = sorted(idfs)
-    if len(seed_top) >= k:
-        theta = seed_top[k - 1]["score"]
-        # ε slack mirrors tsidx/wand.py: bounds are driver-side Python
-        # floats here, but θ comes from partial-agg'd exact scores
-        eps = 1e-9 * abs(theta) + 1e-12
-        ordered = sorted(idfs, key=lambda t: (term_ub[t], t))
-        acc, cut = 0.0, 0
-        for t in ordered:
-            if acc + term_ub[t] < theta - eps:
-                acc += term_ub[t]
-                cut += 1
-            else:
-                break
-        essential = sorted(ordered[cut:])
-    if not essential:
-        # degenerate: θ exceeds the sum of ALL term bounds — no unseen
-        # doc can enter the page; the seed page is final
-        return seed_df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    # candidate blocks = blocks holding >= 1 essential-term posting row
-    # (metadata only); seed blocks are excluded — already scored above
-    ess_blocks = (
-        meta_df.filter(F.col("term").isin(essential))
-        .select("block_id")
-        .distinct()
-        .filter(~F.col("block_id").isin(seed_ids))
-    )
-    rest = (
-        cand.join(F.broadcast(ess_blocks), "block_id", "semi")
-        .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-    )
-    return (
-        seed_df.unionByName(rest)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )

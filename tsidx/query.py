@@ -1510,8 +1510,9 @@ class QueryEngine:
         return wand_topk(self.index, query, k)
 
     def maxscore_topk(self, query: str | list[str], k: int) -> DataFrame:
-        """MaxScore top-k (tsidx.maxscore) — rank- and score-identical to
-        :meth:`bm25_topk`, prunes terms whose bounds can't reach θ."""
+        """MaxScore top-k (tsidx.maxscore) — runs the block-max WAND core,
+        because MaxScore's term rule never prunes a block WAND's block rule
+        keeps; rank- and score-identical to :meth:`bm25_topk`."""
         from tsidx.maxscore import maxscore_topk
 
         return maxscore_topk(self.index, query, k)

@@ -38,13 +38,16 @@ scales past 10^6 blocks with no giant ``isin()`` literal in the plan.
 doubles (relative slack 1e-9 ≫ ulp error): keeping a few extra borderline
 blocks is safe; pruning stays exact because every kept block is scored
 exactly.
+
+This is the only top-k pruning engine: ``tsidx.maxscore.maxscore_topk`` is
+this function (its module says why MaxScore's term rule adds nothing to the
+block rule), and ``wand_topk_batch`` runs the same idf fetch, candidate
+join, bound, seed cover and θ − ε floor per query of a batch.
 """
 
 from __future__ import annotations
 
-import heapq
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tsidx.index import InvertedIndex
@@ -53,6 +56,7 @@ from tsidx.oracle import bm25_idf
 __all__ = ["wand_topk", "wand_topk_batch"]
 
 _SCORE_SCHEMA = "doc_id long, score double"
+_BATCH_SCORE_SCHEMA = "query_id string, doc_id long, score double"
 
 
 def _score_block_arrays(pdf, idfs: dict[str, float], k: int, k1: float,
@@ -113,41 +117,112 @@ def _score_block_arrays(pdf, idfs: dict[str, float], k: int, k1: float,
     return (idx[sel] + base).astype("int64"), scores[sel]
 
 
-def _make_group_scorer(idfs: dict[str, float], k: int, k1: float, b: float,
-                       avgdl: float, block_size: int, codec: str):
+def _bm25_params(meta: dict) -> tuple[float, float, float, int, str]:
+    """(k1, b, avgdl, block_size, codec) of an index's meta."""
+    return (float(meta["k1"]), float(meta["b"]), float(meta["avgdl"]),
+            int(meta["block_size"]), meta["codec"])
+
+
+def _make_group_scorer(idfs: dict[str, float], k: int, meta: dict):
     """applyInPandas scorer: one group = one block_id's term blocks."""
+    params = _bm25_params(meta)
 
     def score_group(pdf):
         import pandas as pd
 
-        doc_ids, scores = _score_block_arrays(
-            pdf, idfs, k, k1, b, avgdl, block_size, codec
-        )
+        doc_ids, scores = _score_block_arrays(pdf, idfs, k, *params)
         return pd.DataFrame({"doc_id": doc_ids, "score": scores})
 
     return score_group
 
 
 def _make_batch_group_scorer(idfs_by_query: dict[str, dict[str, float]],
-                             k: int, k1: float, b: float, avgdl: float,
-                             block_size: int, codec: str):
+                             k: int, meta: dict):
     """applyInPandas scorer for (query_id, block_id) groups: resolves the
     group's idf map from the (driver-built, closure-captured) per-query
     dict, then scores exactly like the single-query engine — so every
     (query, doc) score is bit-identical to the per-query plan."""
+    params = _bm25_params(meta)
 
     def score_group(pdf):
         import pandas as pd
 
         qid = pdf["query_id"].iloc[0]
-        doc_ids, scores = _score_block_arrays(
-            pdf, idfs_by_query[qid], k, k1, b, avgdl, block_size, codec
-        )
+        doc_ids, scores = _score_block_arrays(pdf, idfs_by_query[qid], k, *params)
         return pd.DataFrame(
             {"query_id": qid, "doc_id": doc_ids, "score": scores}
         )
 
     return score_group
+
+
+def _fetch_idfs(index: InvertedIndex, terms: list[str],
+                k: int) -> tuple[dict[str, float], int]:
+    """idf of every indexed term of *terms*, and their candidate-posting
+    count Σ df, from one |terms|-row collect. Empty when there is nothing
+    to rank (no terms, or k <= 0): the empty page needs no job."""
+    if not terms or k <= 0:
+        return {}, 0
+    n = index.meta["n_docs"]
+    rows = index.terms.filter(F.col("term").isin(terms)).collect()
+    return {r["term"]: bm25_idf(n, r["df"]) for r in rows}, sum(r["df"] for r in rows)
+
+
+def _candidates(index: InvertedIndex, terms) -> DataFrame:
+    """Posting blocks of *terms*. With tombstones, each block carries its
+    deleted doc ids (``_dead``); the scorer masks them before its local
+    top-k. UBs stay valid upper bounds (removing docs only lowers block
+    scores)."""
+    cand = index.postings.filter(F.col("term").isin(sorted(terms)))
+    if index.tombstones is None:
+        return cand
+    block_size = int(index.meta["block_size"])
+    dead_by_block = (
+        index.tombstones.select(
+            "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
+        )
+        .groupBy("block_id")
+        .agg(F.collect_list("doc_id").alias("_dead"))
+    )
+    return cand.join(dead_by_block, "block_id", "left")
+
+
+def _bound_wtf(meta: dict):
+    """The BM25 tf/length factor at a block's (max_tf, min_dl): it rises
+    with tf and falls with dl, so it bounds every posting in the block."""
+    k1, b, avgdl, _, _ = _bm25_params(meta)
+    max_tf = F.col("max_tf").cast("double")
+    min_dl = F.col("min_dl").cast("double")
+    return (max_tf * F.lit(k1 + 1.0)) / (
+        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
+    )
+
+
+def _seed_cover(ranked, quota: int, query_of=lambda r: None) -> list:
+    """Seed blocks: the leading rows of each query's highest-UB-first block
+    rows whose candidate counts cover *quota* postings. Every block holds
+    >= 1 candidate posting, so a query's first *quota* rows always do."""
+    seeds, seen = [], {}
+    for r in ranked:
+        q = query_of(r)
+        if seen.get(q, 0) < quota:
+            seeds.append(r)
+            seen[q] = seen.get(q, 0) + r["cand_count"]
+    return seeds
+
+
+def _prune_floor(page: list, k: int) -> float:
+    """θ − ε for one query's seed page, where θ (the page's k-th best score)
+    is a lower bound on the final k-th score; -inf when the seeds filled
+    fewer than k rows. ε slack: UB partial-agg summation order is
+    nondeterministic, so a degenerate block's UB can land a few ulps below
+    a contained doc's exact score; 1e-9 relative slack keeps such blocks
+    (safe — they are then scored exactly) without materially weakening
+    pruning."""
+    if len(page) < k:
+        return float("-inf")
+    theta = min(r["score"] for r in page)
+    return theta - (1e-9 * abs(theta) + 1e-12)
 
 
 def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
@@ -160,36 +235,13 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
 
     spark = index.docs.sparkSession
     ensure_shipped(spark)
-    terms = query_terms(query)
-    n = index.meta["n_docs"]
-    rows = (
-        index.terms.filter(F.col("term").isin(terms)).collect() if terms else []
-    )
-    idfs = {r["term"]: bm25_idf(n, r["df"]) for r in rows}
+    # total candidate postings = Σ df over the query terms — comes with the
+    # (|q|-row) idf fetch; no extra job
+    idfs, total_cand = _fetch_idfs(index, query_terms(query), k)
     if not idfs:
         return spark.createDataFrame([], _SCORE_SCHEMA)
-    k1, b = float(index.meta["k1"]), float(index.meta["b"])
-    avgdl = float(index.meta["avgdl"])
-    block_size = int(index.meta["block_size"])
-    codec = index.meta["codec"]
-
-    cand = index.postings.filter(F.col("term").isin(sorted(idfs)))
-    if index.tombstones is not None:
-        # per-block deleted-id lists ride along with the candidate blocks;
-        # the scorer masks them before its local top-k. UBs stay valid
-        # upper bounds (removing docs only lowers block scores).
-        dead_by_block = (
-            index.tombstones.select(
-                "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
-            )
-            .groupBy("block_id")
-            .agg(F.collect_list("doc_id").alias("_dead"))
-        )
-        cand = cand.join(dead_by_block, "block_id", "left")
-    scorer = _make_group_scorer(idfs, k, k1, b, avgdl, block_size, codec)
-    # total candidate postings = Σ df over the query terms — already on the
-    # driver from the (|q|-row) terms fetch above; no extra job
-    total_cand = sum(r["df"] for r in rows if r["term"] in idfs)
+    cand = _candidates(index, idfs)
+    scorer = _make_group_scorer(idfs, k, index.meta)
     if total_cand <= small_candidate_limit:
         # fast path: below this size the seed/prune choreography (3 jobs)
         # costs more than exactly scoring every candidate block in one pass
@@ -200,11 +252,6 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
             .limit(k)
         )
     idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
-    max_tf = F.col("max_tf").cast("double")
-    min_dl = F.col("min_dl").cast("double")
-    bound_wtf = (max_tf * F.lit(k1 + 1.0)) / (
-        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
-    )
     # per-block upper bounds — a metadata-only DataFrame (payload columns are
     # pruned from the scan); never collected in full. Eagerly checkpointed:
     # both the seed selection and the survivor filter read it, and the
@@ -212,22 +259,15 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
     # re-scanning the candidate metadata per consumer; blocks are freed by
     # the context cleaner when the frame is garbage-collected.
     ub_df = cand.groupBy("block_id").agg(
-        F.sum(idf_map[F.col("term")] * bound_wtf).alias("ub"),
+        F.sum(idf_map[F.col("term")] * _bound_wtf(index.meta)).alias("ub"),
         F.sum("block_df").alias("cand_count"),
     ).localCheckpoint()
-    # bounded seed collect: every block carries >= 1 candidate posting, so
-    # the seed_factor*k highest-UB blocks always cover the seed quota
     seed_rows = (
         ub_df.orderBy(F.desc("ub"), F.asc("block_id"))
         .limit(seed_factor * k)
         .collect()
     )
-    seed_ids, seen = [], 0
-    for r in seed_rows:
-        seed_ids.append(r["block_id"])
-        seen += r["cand_count"]
-        if seen >= seed_factor * k:
-            break
+    seed_ids = [r["block_id"] for r in _seed_cover(seed_rows, seed_factor * k)]
 
     seed_scores = (
         cand.filter(F.col("block_id").isin(seed_ids))
@@ -236,17 +276,12 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
     )
     seed_top = seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
     seed_df = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in seed_top] or [], _SCORE_SCHEMA
+        [(r["doc_id"], r["score"]) for r in seed_top], _SCORE_SCHEMA
     )
-    survivors = ub_df.filter(~F.col("block_id").isin(seed_ids))
-    if len(seed_top) >= k:
-        theta = seed_top[k - 1]["score"]
-        # ε slack: UB partial-agg summation order is nondeterministic, so a
-        # degenerate block's UB can land a few ulps below a contained doc's
-        # exact score; 1e-9 relative slack keeps such blocks (safe — they
-        # are then scored exactly) without materially weakening pruning
-        eps = 1e-9 * abs(theta) + 1e-12
-        survivors = survivors.filter(F.col("ub") >= F.lit(theta - eps))
+    survivors = ub_df.filter(
+        ~F.col("block_id").isin(seed_ids)
+        & (F.col("ub") >= F.lit(_prune_floor(seed_top, k)))
+    )
     rest = (
         cand.join(F.broadcast(survivors.select("block_id")), "block_id", "semi")
         .groupBy("block_id")
@@ -257,9 +292,6 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-
-
-_BATCH_SCORE_SCHEMA = "query_id string, doc_id long, score double"
 
 
 def wand_topk_batch(
@@ -292,15 +324,11 @@ def wand_topk_batch(
 
     spark = index.docs.sparkSession
     ensure_shipped(spark)
+    kk = int(k)
     per_q = {qid: query_terms(q) for qid, q in queries.items()}
-    all_terms = sorted({t for ts in per_q.values() for t in ts})
-    n = index.meta["n_docs"]
-    rows = (
-        index.terms.filter(F.col("term").isin(all_terms)).collect()
-        if all_terms
-        else []
+    idf_all, _ = _fetch_idfs(
+        index, sorted({t for ts in per_q.values() for t in ts}), kk
     )
-    idf_all = {r["term"]: bm25_idf(n, r["df"]) for r in rows}
     idfs_by_query = {
         qid: {t: idf_all[t] for t in ts if t in idf_all}
         for qid, ts in per_q.items()
@@ -308,34 +336,16 @@ def wand_topk_batch(
     idfs_by_query = {qid: m for qid, m in idfs_by_query.items() if m}
     if not idfs_by_query:
         return spark.createDataFrame([], _BATCH_SCORE_SCHEMA)
-    k1, b = float(index.meta["k1"]), float(index.meta["b"])
-    avgdl = float(index.meta["avgdl"])
-    block_size = int(index.meta["block_size"])
-    codec = index.meta["codec"]
-    kk = int(k)
 
-    used_terms = sorted({t for m in idfs_by_query.values() for t in m})
-    cand = index.postings.filter(F.col("term").isin(used_terms))
-    if index.tombstones is not None:
-        dead_by_block = (
-            index.tombstones.select(
-                "doc_id", F.expr(f"doc_id DIV {block_size}").alias("block_id")
-            )
-            .groupBy("block_id")
-            .agg(F.collect_list("doc_id").alias("_dead"))
-        )
-        cand = cand.join(dead_by_block, "block_id", "left")
-
-    # replicate candidate blocks per query via the broadcast fan
+    # every fetched term is some query's term, so idf_all's keys are the
+    # candidate terms; candidate blocks replicate per query via the fan
+    cand = _candidates(index, idf_all)
     fan = spark.createDataFrame(
         [(qid, t) for qid, m in sorted(idfs_by_query.items()) for t in sorted(m)],
         "query_id string, term string",
     )
     cand_q = cand.join(F.broadcast(fan), "term")
-
-    scorer = _make_batch_group_scorer(
-        idfs_by_query, kk, k1, b, avgdl, block_size, codec
-    )
+    scorer = _make_batch_group_scorer(idfs_by_query, kk, index.meta)
 
     # per-(query, block) upper bounds — metadata only, payloads pruned
     idf_fan = spark.createDataFrame(
@@ -346,24 +356,17 @@ def wand_topk_batch(
         ],
         "query_id string, term string, idf double",
     )
-    max_tf = F.col("max_tf").cast("double")
-    min_dl = F.col("min_dl").cast("double")
-    bound_wtf = (max_tf * F.lit(k1 + 1.0)) / (
-        max_tf + F.lit(k1) * (F.lit(1.0 - b) + (F.lit(b) * min_dl) / F.lit(avgdl))
-    )
     ub_df = (
         cand.join(F.broadcast(idf_fan), "term")
         .groupBy("query_id", "block_id")
         .agg(
-            F.sum(F.col("idf") * bound_wtf).alias("ub"),
+            F.sum(F.col("idf") * _bound_wtf(index.meta)).alias("ub"),
             F.sum("block_df").alias("cand_count"),
         )
         .localCheckpoint()
     )
 
     # bounded per-query seed selection (|Q| * seed_factor * k rows)
-    from pyspark.sql import Window
-
     w_seed = Window.partitionBy("query_id").orderBy(
         F.desc("ub"), F.asc("block_id")
     )
@@ -372,15 +375,14 @@ def wand_topk_batch(
         .filter(F.col("rn") <= seed_factor * kk)
         .collect()
     )
-    seed_pairs: list[tuple[str, int]] = []
-    seen: dict[str, int] = {}
-    for r in sorted(seed_rows, key=lambda r: (r["query_id"], r["rn"])):
-        qid = r["query_id"]
-        if seen.get(qid, 0) >= seed_factor * kk:
-            continue
-        seed_pairs.append((qid, r["block_id"]))
-        seen[qid] = seen.get(qid, 0) + r["cand_count"]
-
+    seed_pairs = [
+        (r["query_id"], r["block_id"])
+        for r in _seed_cover(
+            sorted(seed_rows, key=lambda r: (r["query_id"], r["rn"])),
+            seed_factor * kk,
+            query_of=lambda r: r["query_id"],
+        )
+    ]
     seed_pair_df = spark.createDataFrame(
         seed_pairs, "query_id string, block_id long"
     )
@@ -398,30 +400,22 @@ def wand_topk_batch(
         .collect()
     )
     seed_df = spark.createDataFrame(
-        [(r["query_id"], r["doc_id"], r["score"]) for r in seed_top] or [],
+        [(r["query_id"], r["doc_id"], r["score"]) for r in seed_top],
         _BATCH_SCORE_SCHEMA,
     )
-    # per-query θ (only queries whose seeds produced a full page prune)
-    thetas = []
-    by_q: dict[str, list] = {}
+    # per-query pruning floor (-inf for queries whose seeds fell short of k)
+    pages = {qid: [] for qid in idfs_by_query}
     for r in seed_top:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for qid, rs in by_q.items():
-        if len(rs) >= kk:
-            theta = min(r["score"] for r in rs)
-            eps = 1e-9 * abs(theta) + 1e-12
-            thetas.append((qid, theta - eps))
-        else:
-            thetas.append((qid, float("-inf")))
-    for qid in idfs_by_query:
-        if qid not in by_q:
-            thetas.append((qid, float("-inf")))
-    theta_df = spark.createDataFrame(thetas, "query_id string, theta double")
+        pages[r["query_id"]].append(r)
+    floor_df = spark.createDataFrame(
+        [(qid, _prune_floor(page, kk)) for qid, page in pages.items()],
+        "query_id string, floor double",
+    )
 
     survivors = (
         ub_df.join(F.broadcast(seed_pair_df), ["query_id", "block_id"], "anti")
-        .join(F.broadcast(theta_df), "query_id")
-        .filter(F.col("ub") >= F.col("theta"))
+        .join(F.broadcast(floor_df), "query_id")
+        .filter(F.col("ub") >= F.col("floor"))
         .select("query_id", "block_id")
     )
     rest = (
