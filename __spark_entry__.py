@@ -412,9 +412,9 @@ def _q_percolate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-max WAND top-k — bit-identical to the naive BM25 plan by
     construction (safe pruning; tsidx/wand.py), so it shares bm25_topk's
-    oracle SQL. ``small_candidate_limit=0`` forces the seed/prune path so
-    the correctness gate exercises the pruning machinery, not the fast
-    path."""
+    oracle SQL. ``small_candidate_limit=0`` forces the pruning path so
+    the correctness gate exercises the one-pass block pruning, not the
+    fast path."""
     from tsidx.wand import wand_topk
 
     idx = get_index(spark, sf_dir)
@@ -1096,7 +1096,10 @@ def _lsh_ann_sql() -> str:
     join on (table, bucket); survivors rescore with exact cosine."""
     from tsidx.ann import _hyperplanes
 
-    dim = 64  # the embeddings table's dimension (asserted by the entry)
+    # the embeddings table's dimension. Nothing asserts it: the entry's
+    # lsh_bucketed_topk infers dim from the data, so another dimension
+    # would show up only as a gate diff against these plane literals
+    dim = 64
     selects = []
     for t in range(LSH_ANN_TABLES):
         planes = _hyperplanes(dim, LSH_ANN_PLANES, LSH_ANN_SEED + 1000 * t)
@@ -1992,8 +1995,9 @@ def _q_champion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tier-1 champion-list probe (tsidx/champion.py): BM25 over each
     query term's top-m postings only, on the derived Zipf corpus. The
     twin recomputes the same tier from the same derivation, so the entry
-    checks the operator exactly; recall vs the full index is the
-    separate champion_recall gate."""
+    checks the operator exactly. This partial-score probe is
+    exactness-checked only: champion_recall gates the recall of the
+    rescored method (champion_topk_rescored), not of this probe."""
     from tsidx.champion import champion_topk
 
     eng = _get_zipf_engine(spark, sf_dir)
@@ -3214,8 +3218,8 @@ def _q_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (MaxScore's term rule never prunes a block WAND's block rule keeps, so
     the name maps to ``wand_topk``); bit-identical to the naive BM25 plan
     by construction, so it shares bm25_topk's oracle SQL.
-    ``small_candidate_limit=0`` forces the seed/θ/prune path so the gate
-    exercises the pruning machinery, not the fast path."""
+    ``small_candidate_limit=0`` forces the pruning path so the gate
+    exercises the one-pass block pruning, not the fast path."""
     from tsidx.maxscore import maxscore_topk
 
     idx = get_index(spark, sf_dir)
@@ -5119,11 +5123,11 @@ def _rotate_gate_window(
     position 50 (the r3->r4 and r4->r5 trap). The order is therefore derived
     at import time from the committed ``CORRECTNESS_r0*.json`` files sitting
     next to this module: the three stable canaries first, then every key
-    with no driver CORRECTNESS row in any committed round (never-checked
-    first), then the rest stalest-first (smallest most-recent round). Ties
-    preserve the literal registry order. The result is a pure function of
-    committed state — deterministic, and no future round can forget to
-    rotate.
+    with no hash-matched driver CORRECTNESS row in any committed round
+    (never-checked first), then the rest stalest-first (smallest
+    most-recent checked round). Ties preserve the literal registry order.
+    The result is a pure function of committed state — deterministic, and
+    no future round can forget to rotate.
     """
     here = os.path.dirname(os.path.abspath(__file__))
     last_round: dict[str, int] = {}
@@ -5139,8 +5143,10 @@ def _rotate_gate_window(
             continue
         if not isinstance(rows, dict):
             continue
-        for key in rows:
-            if key in literal:
+        for key, row in rows.items():
+            # a key counts as checked only when its oracle hash matched;
+            # an ``err``/``no_oracle`` row verified nothing
+            if key in literal and isinstance(row, dict) and row.get("hash_match") is True:
                 last_round[key] = max(last_round.get(key, 0), rnd)
     pos = {k: i for i, k in enumerate(literal)}
     rest = [k for k in literal if k not in _GATE_CANARIES]

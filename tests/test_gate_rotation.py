@@ -1,6 +1,6 @@
 """The self-rotating driver-gate order (VERDICT r4 task #1): queries()
 must put the canaries first, then every key with no committed driver
-CORRECTNESS row, then the rest stalest-first — derived purely from the
+hash-matched CORRECTNESS row, then the rest stalest-first — derived purely from the
 committed CORRECTNESS_r*.json files, deterministically."""
 
 from __future__ import annotations
@@ -28,8 +28,8 @@ def _last_round_map(keys):
         rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
         with open(path) as fh:
             rows = json.load(fh)
-        for k in rows:
-            if k in keys:
+        for k, row in rows.items():
+            if k in keys and row.get("hash_match") is True:
                 last[k] = max(last.get(k, 0), rnd)
     return last
 
@@ -74,10 +74,44 @@ def test_rotation_is_pure_function_of_committed_state(tmp_path, monkeypatch):
     mod = _entry_module()
     lit = {k: None for k in ["index_stats", "bm25_topk", "wand_topk",
                              "a", "b", "c", "d"]}
+    ok = {"hash_match": True}
     hist = {
-        "CORRECTNESS_r01.json": {"a": {}, "c": {}},
-        "CORRECTNESS_r02.json": {"c": {}, "d": {}},
+        "CORRECTNESS_r01.json": {"a": ok, "c": ok},
+        "CORRECTNESS_r02.json": {"c": ok, "d": ok},
     }
+    _commit_history(tmp_path, monkeypatch, mod, hist)
+    got = list(mod._rotate_gate_window(lit))
+    assert got == ["index_stats", "bm25_topk", "wand_topk",
+                   "b", "a", "c", "d"]
+
+
+def test_unverified_rows_do_not_count_as_checked(tmp_path, monkeypatch):
+    """A key whose only committed rows are errors or ``no_oracle`` (no
+    hash match) stays in the never-checked group, ahead of checked keys."""
+    mod = _entry_module()
+    lit = {k: None for k in ["index_stats", "bm25_topk", "wand_topk",
+                             "a", "b", "c", "d"]}
+    unverified = {"rows_match": None, "schema_match": None, "hash_match": None,
+                  "spark_rows": 50, "oracle_rows": None}
+    hist = {
+        "CORRECTNESS_r01.json": {
+            "a": {**unverified, "err": "no_oracle"},
+            "b": {"hash_match": True},
+        },
+        "CORRECTNESS_r02.json": {
+            "c": {**unverified, "spark_rows": None, "err": "Py4JJavaError: boom"},
+            "d": "not a row",
+        },
+    }
+    _commit_history(tmp_path, monkeypatch, mod, hist)
+    got = list(mod._rotate_gate_window(lit))
+    assert got == ["index_stats", "bm25_topk", "wand_topk",
+                   "a", "c", "d", "b"]
+
+
+def _commit_history(tmp_path, monkeypatch, mod, hist):
+    """Write *hist* as committed CORRECTNESS files next to a stand-in
+    __spark_entry__.py that the rotation reads."""
     for name, rows in hist.items():
         (tmp_path / name).write_text(json.dumps(rows))
     real_abspath = os.path.abspath
@@ -87,6 +121,3 @@ def test_rotation_is_pure_function_of_committed_state(tmp_path, monkeypatch):
         lambda p: str(tmp_path / "__spark_entry__.py")
         if p.endswith("__spark_entry__.py") else real_abspath(p),
     )
-    got = list(mod._rotate_gate_window(lit))
-    assert got == ["index_stats", "bm25_topk", "wand_topk",
-                   "b", "a", "c", "d"]

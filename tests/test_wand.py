@@ -89,10 +89,10 @@ def test_wand_array_codec(spark, sonnets_transcripts, sonnets):
 
 
 def test_wand_no_driver_scale_collect(spark, generated, monkeypatch):
-    """Survivor selection must stay a DataFrame plan: with >= 10^4 posting
-    blocks, no single driver collect during wand_topk may return more than
-    O(seed_factor * k) rows (regression: per-block metadata collect + giant
-    isin() survivor literal)."""
+    """Pruning must stay a DataFrame plan: with >= 10^4 posting blocks, no
+    single driver collect during wand_topk may return more than O(k) rows
+    (regression: per-block metadata collect + giant isin() survivor
+    literal)."""
     import datetime
 
     base = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
@@ -109,7 +109,7 @@ def test_wand_no_driver_scale_collect(spark, generated, monkeypatch):
     n_blocks = idx.postings.select("block_id").distinct().count()
     assert n_blocks >= 10_000
 
-    k, seed_factor = 10, 4
+    k = 10
     collected_sizes = []
     df_cls = type(idx.postings)  # the concrete (classic) DataFrame class
     real_collect = df_cls.collect
@@ -123,13 +123,12 @@ def test_wand_no_driver_scale_collect(spark, generated, monkeypatch):
     got = [
         (r["doc_id"], r["score"])
         for r in real_collect(
-            wand_topk(idx, "harbor lantern", k, seed_factor=seed_factor,
-                      small_candidate_limit=0)
+            wand_topk(idx, "harbor lantern", k, small_candidate_limit=0)
         )
     ]
     monkeypatch.undo()
     assert collected_sizes, "expected bounded driver collects"
-    cap = max(seed_factor * k, 64)  # terms fetch + seed rows + seed top-k
+    cap = max(4 * k, 64)  # the idf rows and the k-row page
     assert max(collected_sizes) <= cap, collected_sizes
 
     oracle = OracleIndex()
@@ -163,6 +162,87 @@ def test_wand_tie_break_with_duplicate_docs(spark, generated):
                 (r["doc_id"], r["score"]) for r in wand_topk(idx, q, k).collect()
             ]
             assert got == oracle.bm25_topk(q, k), (q, k)
+
+
+SPLIT_QUERIES = ["ember", "harbor lantern glacier", "the and of", "zzrare the and of", "turn"]
+
+
+@pytest.fixture
+def split_batches(spark):
+    """Uncoalesced shuffle partitions and 3-row Arrow batches: a block's
+    rows straddle batches and each partition prunes with its own θ."""
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+    }
+    saved = {key: spark.conf.get(key, None) for key in conf}
+    for key, value in conf.items():
+        spark.conf.set(key, value)
+    yield
+    for key, value in saved.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+@pytest.mark.parametrize("tombstones", [False, True], ids=["live", "tombstones"])
+def test_pruning_pass_split_batches(spark, generated, generated_transcripts,
+                                    split_batches, tombstones):
+    """wand_topk, maxscore_topk and wand_topk_batch pages equal the oracle
+    when blocks spread over many partitions and straddle Arrow batches."""
+    from tsidx.deletes import delete_docs
+    from tsidx.maxscore import maxscore_topk
+    from tsidx.wand import wand_topk_batch
+
+    idx = build_index(generated_transcripts, block_size=16)
+    oracle = OracleIndex()
+    oracle.add_corpus(generated)
+    deleted = set()
+    if tombstones:  # the head of every query's page
+        deleted = {d for q in SPLIT_QUERIES for d, _ in oracle.bm25_topk(q, 2)}
+        idx = delete_docs(idx, sorted(deleted))
+    batch = {f"q{i}": q for i, q in enumerate(SPLIT_QUERIES)}
+    for k in (1, 10, 50):
+        pages = {}
+        for r in wand_topk_batch(idx, batch, k).collect():
+            pages.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        for qid, q in batch.items():
+            want = [
+                p for p in oracle.bm25_topk(q, k + len(deleted)) if p[0] not in deleted
+            ][:k]
+            for ranker in (wand_topk, maxscore_topk):
+                got = [
+                    (r["doc_id"], r["score"])
+                    for r in ranker(idx, q, k, small_candidate_limit=0).collect()
+                ]
+                assert got == want, (ranker.__name__, q, k)
+            assert sorted(pages[qid], key=lambda t: (-t[1], t[0])) == want, (qid, k)
+
+
+def test_wand_job_count(spark, generated_transcripts, tmp_path):
+    """A pruned query launches at most three Spark jobs (idf fetch, the
+    candidates' shuffle, scoring + merge) on an index read from disk; a
+    k=0 call launches none, and an unknown term costs only its lookup."""
+    from tsidx.index import InvertedIndex
+
+    build_index(generated_transcripts, block_size=16).write(str(tmp_path / "idx"))
+    idx = InvertedIndex.read(spark, str(tmp_path / "idx"))
+    sc = spark.sparkContext
+    wand_topk(idx, "the and of", 10, small_candidate_limit=0).collect()  # warm-up
+
+    def jobs(group, query, k):
+        sc.setJobGroup(group, group)
+        try:
+            wand_topk(idx, query, k, small_candidate_limit=0).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("wand-pruned", "the and of", 10) <= 3
+    assert jobs("wand-k0", "the and of", 0) == 0
+    assert jobs("wand-unknown", "nonexistentterm", 10) <= 1
 
 
 # per corpus: a batch whose "q_unknown" query has no indexed term; a hot

@@ -739,6 +739,9 @@ def mmr_rerank(
     # pairwise/BLAS sums and any replica's sequential folds would then
     # pick an arbitrary winner. Rounding sims and pair sims @9 resolves
     # exact ties by the documented (mmr, id) order on every engine.
+    # np.round rounds half to even, DuckDB's round() half away from zero:
+    # a sim exactly on a 5e-10 boundary would round differently and could
+    # flip an argmax, so the twin is re-verified per corpus.
     sims = np.round(np.array([r["sim"] for r in rows], dtype=np.float64), 9)
     mat = np.array([r[emb_col] for r in rows], dtype=np.float64)
     norms = np.linalg.norm(mat, axis=1)

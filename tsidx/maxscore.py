@@ -6,21 +6,23 @@ bound ``UB_t = idf_t · max over blocks of wtf(max_tf, min_dl)``, call the
 largest ascending prefix whose bounds sum to < θ − ε **non-essential**, and
 score only blocks that hold an essential term's posting.
 
-Given the same seeds and θ, that term rule never prunes a block the block
-rule of ``wand_topk`` keeps. A block whose postings all belong to
-non-essential terms has ``UB = Σ_t idf_t · wtf_block(t) ≤ Σ_{non-essential}
-UB_t < θ − ε``, so WAND drops it as well; every block WAND keeps therefore
-holds an essential term. Both engines pick their seed blocks from the same
-per-block UBs and so reach the same θ — a MaxScore engine would score a
-superset of WAND's survivor blocks and pay an extra per-term bound collect
-(12 Spark jobs per pruned query against WAND's 9). The rare-term +
-stopwords case is no exception: a stopword-only block's UB is below θ too,
-so WAND also scores only the rare term's blocks.
+At any threshold θ, that term rule never prunes a block the block rule of
+``wand_topk`` keeps. A block whose postings all belong to non-essential
+terms has ``UB = Σ_t idf_t · wtf_block(t) ≤ Σ_{non-essential} UB_t < θ − ε``,
+so WAND drops it as well; every block WAND keeps therefore holds an
+essential term. ``wand_topk`` prunes each partition with its own running
+θ_p (the partition's k-th best exact score, a lower bound on the global
+k-th score), and the argument holds for every θ_p: run with the same
+θ_p, a MaxScore engine would score a superset of WAND's blocks and pay an
+extra per-term bound collect on top of WAND's three Spark jobs per pruned
+query. The rare-term + stopwords case is no exception: a stopword-only
+block's UB is below θ_p too, so WAND also scores only the rare term's
+blocks.
 
 ``maxscore_topk`` is therefore the same function as
 :func:`tsidx.wand.wand_topk` — same signature
-``(index, query, k, seed_factor=4, small_candidate_limit=200_000)``, same
-pages (bit-identical to ``QueryEngine.bm25_topk`` and the oracle). The name
+``(index, query, k, small_candidate_limit=200_000)``, same pages
+(bit-identical to ``QueryEngine.bm25_topk`` and the oracle). The name
 stays for its callers: ``QueryEngine.maxscore_topk``, ``jobs/query_topk.py
 --engine maxscore`` and the ``maxscore_topk`` gate entry.
 """

@@ -275,10 +275,9 @@ class QueryEngine:
         production engine exposes (cf. Lucene/ES ``explain``).
 
         Physical shape: ``bm25_topk`` runs first and its k docIDs (a
-        bounded, k-sized collect — same contract as WAND's θ-seed) are
-        re-planted as a ``doc_id IN`` filter over the already-decoded
-        posting rows of the query's terms; nothing data-scale ever
-        reaches the driver.
+        bounded, k-sized collect) are re-planted as a ``doc_id IN``
+        filter over the already-decoded posting rows of the query's terms;
+        nothing data-scale ever reaches the driver.
         """
         terms = self.terms_of(query)
         idfs = self.query_idfs(terms)

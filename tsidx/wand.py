@@ -1,48 +1,51 @@
-"""Block-max WAND top-k: safe block pruning with a bounded heap.
+"""Block-max WAND top-k: safe block pruning inside one scoring pass.
 
 SURVEY §2.4 N7. The naive plan (`QueryEngine.bm25_topk`) decodes every
-posting of every query term, scores, and TakeOrdereds. This engine prunes
+posting of every query term, scores, and TakeOrdereds. This engine skips
 whole posting *blocks* using the block-max metadata stored at build time
-(`max_wtf` = block max of the BM25 tf/length factor, `tsidx/build.py`):
+(``max_tf``/``min_dl`` per term block, `tsidx/build.py`):
 
-1. **Upper bounds.** For each candidate ``block_id`` (a docID range),
+1. **Upper bounds.** Every candidate posting row gets its block's
    ``UB = Σ_t idf_t · wtf(max_tf, min_dl)`` over the query's terms — the
-   BM25 tf/length factor is monotone increasing in tf and decreasing in dl,
-   so this bounds every doc in the range. Computed JVM-side from metadata
-   columns only (no posting bytes touched).
-2. **Seed θ.** Exactly score the few highest-UB block groups (enough to
-   cover ≥ seed_factor·k candidate postings); θ = the k-th best seed score —
-   a valid lower bound on the final k-th score.
-3. **Prune + score.** Only blocks with ``UB ≥ θ − ε`` are decoded and scored.
-   Scoring runs as ``applyInPandas`` over ``groupBy(block_id)``: because a
-   document's postings for *all* terms share its block_id, every doc's score
-   is complete within one group, so each group emits only its local top-k
-   (bounded min-heap semantics) and the global top-k is the TakeOrdered
-   merge of group winners.
+   BM25 tf/length factor rises with tf and falls with dl, so UB bounds
+   every doc of the block (a docID range). It is a window sum over
+   ``partitionBy(block_id)`` on metadata columns; the window's exchange
+   also puts every row of a block in one partition.
+2. **One pass.** Each partition is sorted by (UB desc, block_id) and fed
+   to a ``mapInPandas`` scorer. It visits the blocks in that order, scores
+   each exactly and keeps a running top-k whose k-th score is θ_p. At the
+   first block with ``UB < θ_p − ε`` it stops decoding: every later block
+   of the partition has a UB no larger. The remaining Arrow batches are
+   drained undecoded.
+3. **Merge.** The partitions' pages meet in
+   ``orderBy(-score, doc_id).limit(k)``.
+
+Pruning is exact. θ_p is the k-th best score of k exactly scored live
+docs, so it is a lower bound on the global k-th score; a skipped block's
+UB is below it, so none of its docs can enter the global page, ties
+included. ``ε`` (relative 1e-9) absorbs the nondeterministic summation
+order of the UB doubles: keeping a borderline block is safe, it is scored
+exactly. A partition-local θ_p is never above the global θ, so spreading
+blocks over more partitions only scores more blocks, never different
+answers.
 
 Rank identity: per-doc contributions accumulate in sorted-term order into a
 float64 dense array — the same IEEE754 op order as the single-node oracle
 (`tsidx/oracle.py`) and the naive engine, so scores are bit-identical to
-both. Ties break by ascending doc_id. Pruning is safe: skipped groups have
-UB < θ ≤ final k-th score, and θ is established from ≥ k fully-scored docs.
+both. Ties break by ascending doc_id.
 
-At 10^12 docs: block metadata is ~|q| rows per 2^20-doc range; the UB
-aggregation shuffles only metadata and *stays a DataFrame* — the driver
-never materializes per-block rows. The only collects are bounded: the
-seed-block selection (``ORDER BY ub DESC LIMIT seed_factor·k`` — each block
-holds ≥ 1 candidate, so that prefix always covers the seed quota) and the
-k-row seed top-k. Survivors are selected by a broadcast **semi-join** of
-the candidate postings against ``ub_df.filter(ub ≥ θ − ε)``, so pruning
-scales past 10^6 blocks with no giant ``isin()`` literal in the plan.
-``ε`` absorbs the nondeterministic partial-agg summation order of the UB
-doubles (relative slack 1e-9 ≫ ulp error): keeping a few extra borderline
-blocks is safe; pruning stays exact because every kept block is scored
-exactly.
+A pruned query costs three Spark jobs: the |q|-row idf fetch, the
+candidates' shuffle and the scoring + merge stage. The driver collects
+only the idf rows and the k-row page; per-block rows never leave the
+executors, so the plan scales past 10^6 blocks. Below
+``small_candidate_limit`` candidate postings the bound column and the sort
+cost more than they save, and every candidate block is scored by a
+grouped scorer instead.
 
 This is the only top-k pruning engine: ``tsidx.maxscore.maxscore_topk`` is
-this function (its module says why MaxScore's term rule adds nothing to the
-block rule), and ``wand_topk_batch`` runs the same idf fetch, candidate
-join, bound, seed cover and θ − ε floor per query of a batch.
+``wand_topk`` (its module says why MaxScore's term rule adds nothing to the
+block rule), and ``wand_topk_batch`` runs the same pass keyed by
+(query_id, block_id) with one running top-k per query.
 """
 
 from __future__ import annotations
@@ -95,7 +98,7 @@ def _score_block_arrays(pdf, idfs: dict[str, float], k: int, k1: float,
         touched[off] = True
     if "_dead" in pdf.columns:
         # tombstoned docs are masked BEFORE the local top-k: they must
-        # neither seed θ nor crowd live docs out of a group's k rows
+        # neither raise θ nor crowd live docs out of a block's k rows
         dead = pdf["_dead"].iloc[0]
         if dead is not None and len(dead):
             doff = np.asarray(dead, dtype=np.int64) - base
@@ -132,26 +135,6 @@ def _make_group_scorer(idfs: dict[str, float], k: int, meta: dict):
 
         doc_ids, scores = _score_block_arrays(pdf, idfs, k, *params)
         return pd.DataFrame({"doc_id": doc_ids, "score": scores})
-
-    return score_group
-
-
-def _make_batch_group_scorer(idfs_by_query: dict[str, dict[str, float]],
-                             k: int, meta: dict):
-    """applyInPandas scorer for (query_id, block_id) groups: resolves the
-    group's idf map from the (driver-built, closure-captured) per-query
-    dict, then scores exactly like the single-query engine — so every
-    (query, doc) score is bit-identical to the per-query plan."""
-    params = _bm25_params(meta)
-
-    def score_group(pdf):
-        import pandas as pd
-
-        qid = pdf["query_id"].iloc[0]
-        doc_ids, scores = _score_block_arrays(pdf, idfs_by_query[qid], k, *params)
-        return pd.DataFrame(
-            {"query_id": qid, "doc_id": doc_ids, "score": scores}
-        )
 
     return score_group
 
@@ -198,35 +181,97 @@ def _bound_wtf(meta: dict):
     )
 
 
-def _seed_cover(ranked, quota: int, query_of=lambda r: None) -> list:
-    """Seed blocks: the leading rows of each query's highest-UB-first block
-    rows whose candidate counts cover *quota* postings. Every block holds
-    >= 1 candidate posting, so a query's first *quota* rows always do."""
-    seeds, seen = [], {}
-    for r in ranked:
-        q = query_of(r)
-        if seen.get(q, 0) < quota:
-            seeds.append(r)
-            seen[q] = seen.get(q, 0) + r["cand_count"]
-    return seeds
+def _block_runs(batches, keys: tuple[str, ...]):
+    """(frame, start, stop) row runs sharing *keys*, in input order, over
+    a partition's pandas batches. A run may straddle Arrow batches, so each
+    batch's last run is carried over into the next batch."""
+    import numpy as np
+    import pandas as pd
+
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if not len(pdf):
+            continue
+        change = np.zeros(len(pdf), dtype=bool)
+        for c in keys:
+            v = pdf[c].to_numpy()
+            change[1:] |= v[1:] != v[:-1]
+        bounds = [0, *np.flatnonzero(change).tolist(), len(pdf)]
+        for lo, hi in zip(bounds[:-2], bounds[1:-1]):
+            yield pdf, lo, hi
+        carry = pdf.iloc[bounds[-2]:]
+    if carry is not None:
+        yield carry, 0, len(carry)
 
 
-def _prune_floor(page: list, k: int) -> float:
-    """θ − ε for one query's seed page, where θ (the page's k-th best score)
-    is a lower bound on the final k-th score; -inf when the seeds filled
-    fewer than k rows. ε slack: UB partial-agg summation order is
-    nondeterministic, so a degenerate block's UB can land a few ulps below
-    a contained doc's exact score; 1e-9 relative slack keeps such blocks
-    (safe — they are then scored exactly) without materially weakening
-    pruning."""
-    if len(page) < k:
-        return float("-inf")
-    theta = min(r["score"] for r in page)
+def _make_pass_scorer(idfs_of, k: int, meta: dict, keys: tuple[str, ...]):
+    """mapInPandas scorer of the pruning pass. The partition arrives sorted
+    by (*keys[:-1], _ub desc, block_id), so each query's blocks come in
+    falling-UB order. Keeps an exact running top-k per query (``idfs_of``
+    maps a query_id — None for a single query — to its idf map) and skips,
+    undecoded, every block from the first one whose UB is below its
+    query's θ − ε."""
+    params = _bm25_params(meta)
+    query_col = keys[0] if len(keys) > 1 else None
+
+    def score_partition(batches):
+        import numpy as np
+        import pandas as pd
+
+        pages = {}  # query -> (doc_ids, scores) in (-score, doc_id) order
+        done = set()
+        for pdf, lo, hi in _block_runs(batches, keys):
+            q = pdf[query_col].iat[lo] if query_col else None
+            if q in done:
+                continue
+            ids, scores = pages.get(q, (np.empty(0, np.int64), np.empty(0)))
+            if len(scores) == k and pdf["_ub"].iat[lo] < _prune_floor(scores[-1]):
+                done.add(q)
+                continue
+            d, s = _score_block_arrays(pdf.iloc[lo:hi], idfs_of(q), k, *params)
+            ids, scores = np.concatenate([ids, d]), np.concatenate([scores, s])
+            top = np.lexsort((ids, -scores))[:k]
+            pages[q] = ids[top], scores[top]
+        for q, (ids, scores) in pages.items():
+            if len(ids):
+                head = {query_col: q} if query_col else {}
+                yield pd.DataFrame({**head, "doc_id": ids, "score": scores})
+
+    return score_partition
+
+
+def _one_pass(cand: DataFrame, idf, keys: tuple[str, ...], idfs_of, k: int,
+              meta: dict, schema: str) -> DataFrame:
+    """Per-(*keys) upper bounds as a window sum — its exchange colocates
+    each block — then every partition through the pass scorer in
+    falling-UB order. *idf* is the candidate row's idf column."""
+    ub = F.sum(idf * _bound_wtf(meta)).over(Window.partitionBy(*keys))
+    return (
+        cand.withColumn("_ub", ub)
+        .sortWithinPartitions(*keys[:-1], F.desc("_ub"), keys[-1])
+        .mapInPandas(_make_pass_scorer(idfs_of, k, meta, keys), schema=schema)
+    )
+
+
+def _empty_page(spark, schema: str) -> DataFrame:
+    """An empty result; ``limit(0)`` plans it as an empty local relation,
+    so collecting it launches no Spark job."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def _prune_floor(theta: float) -> float:
+    """θ − ε for a running k-th best score θ. ε slack: the UB window sum
+    adds in shuffle order, which is nondeterministic, so a block's UB can
+    land a few ulps below a contained doc's exact score; 1e-9 relative
+    slack keeps such blocks (safe — they are then scored exactly) without
+    materially weakening pruning."""
     return theta - (1e-9 * abs(theta) + 1e-12)
 
 
 def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
-              seed_factor: int = 4, small_candidate_limit: int = 200_000) -> DataFrame:
+              small_candidate_limit: int = 200_000) -> DataFrame:
     """Deterministic BM25 top-k with block-max pruning; returns
     (doc_id, score) ordered by (-score, doc_id), bit-identical to the
     oracle and to ``QueryEngine.bm25_topk``."""
@@ -239,85 +284,39 @@ def wand_topk(index: InvertedIndex, query: str | list[str], k: int,
     # (|q|-row) idf fetch; no extra job
     idfs, total_cand = _fetch_idfs(index, query_terms(query), k)
     if not idfs:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return _empty_page(spark, _SCORE_SCHEMA)
     cand = _candidates(index, idfs)
-    scorer = _make_group_scorer(idfs, k, index.meta)
     if total_cand <= small_candidate_limit:
-        # fast path: below this size the seed/prune choreography (3 jobs)
-        # costs more than exactly scoring every candidate block in one pass
-        return (
-            cand.groupBy("block_id")
-            .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        # fast path: below this size the bound window and sort cost more
+        # than exactly scoring every candidate block in one grouped pass
+        scored = cand.groupBy("block_id").applyInPandas(
+            _make_group_scorer(idfs, k, index.meta), schema=_SCORE_SCHEMA
         )
-    idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
-    # per-block upper bounds — a metadata-only DataFrame (payload columns are
-    # pruned from the scan); never collected in full. Eagerly checkpointed:
-    # both the seed selection and the survivor filter read it, and the
-    # checkpoint (~24 B/block, <= ~10^6 blocks at 10^12 docs) avoids
-    # re-scanning the candidate metadata per consumer; blocks are freed by
-    # the context cleaner when the frame is garbage-collected.
-    ub_df = cand.groupBy("block_id").agg(
-        F.sum(idf_map[F.col("term")] * _bound_wtf(index.meta)).alias("ub"),
-        F.sum("block_df").alias("cand_count"),
-    ).localCheckpoint()
-    seed_rows = (
-        ub_df.orderBy(F.desc("ub"), F.asc("block_id"))
-        .limit(seed_factor * k)
-        .collect()
-    )
-    seed_ids = [r["block_id"] for r in _seed_cover(seed_rows, seed_factor * k)]
-
-    seed_scores = (
-        cand.filter(F.col("block_id").isin(seed_ids))
-        .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-    )
-    seed_top = seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    seed_df = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in seed_top], _SCORE_SCHEMA
-    )
-    survivors = ub_df.filter(
-        ~F.col("block_id").isin(seed_ids)
-        & (F.col("ub") >= F.lit(_prune_floor(seed_top, k)))
-    )
-    rest = (
-        cand.join(F.broadcast(survivors.select("block_id")), "block_id", "semi")
-        .groupBy("block_id")
-        .applyInPandas(scorer, schema=_SCORE_SCHEMA)
-    )
-    return (
-        seed_df.unionByName(rest)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    else:
+        idf_map = F.create_map(*[F.lit(x) for t in sorted(idfs) for x in (t, idfs[t])])
+        scored = _one_pass(cand, idf_map[F.col("term")], ("block_id",),
+                           lambda _q: idfs, k, index.meta, _SCORE_SCHEMA)
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def wand_topk_batch(
     index: InvertedIndex,
     queries: dict[str, str | list[str]],
     k: int,
-    seed_factor: int = 4,
 ) -> DataFrame:
     """Block-max WAND for a *batch* of queries: per-query top-k
     (query_id, doc_id, score), each page bit-identical to the per-query
     ``wand_topk`` / naive plan.
 
-    One metadata+payload scan covers the union of all queries' terms; the
-    per-(query, block) upper bounds are ONE metadata-only aggregation over
-    a broadcast (query_id, term) fan-out, and pruning survives as a
-    DataFrame join — per-query θ values ride a broadcast |Q|-row table,
-    never a literal list. Candidate blocks replicate per query *using*
-    them (the fan join), so a block shared by Q queries decodes Q times —
-    the price of per-query pruning; the naive batch
+    One scan covers the union of all queries' terms; a broadcast
+    (query_id, term, idf) fan-out replicates each candidate block per query
+    *using* it, and the pruning pass runs keyed by (query_id, block_id)
+    with one running top-k per query. A block shared by Q queries decodes
+    up to Q times — the price of per-query pruning; the naive batch
     (``QueryEngine.bm25_topk_batch``) decodes once but scores everything,
-    so WAND-batch wins when pruning discards most blocks (hot terms,
-    small k), naive-batch when queries are selective anyway.
-
-    Driver-side work stays bounded by |Q|·seed_factor·k rows (seed
-    selection + seed pages); everything else is DataFrame-shaped exactly
-    like the single-query engine.
+    so WAND-batch wins when pruning discards most blocks (hot terms, small
+    k), naive-batch when queries are selective anyway. The driver collects
+    only the idf rows.
     """
     from tsidx.ship import ensure_shipped
     from tsidx.tokenize import query_terms
@@ -335,19 +334,10 @@ def wand_topk_batch(
     }
     idfs_by_query = {qid: m for qid, m in idfs_by_query.items() if m}
     if not idfs_by_query:
-        return spark.createDataFrame([], _BATCH_SCORE_SCHEMA)
+        return _empty_page(spark, _BATCH_SCORE_SCHEMA)
 
     # every fetched term is some query's term, so idf_all's keys are the
-    # candidate terms; candidate blocks replicate per query via the fan
-    cand = _candidates(index, idf_all)
-    fan = spark.createDataFrame(
-        [(qid, t) for qid, m in sorted(idfs_by_query.items()) for t in sorted(m)],
-        "query_id string, term string",
-    )
-    cand_q = cand.join(F.broadcast(fan), "term")
-    scorer = _make_batch_group_scorer(idfs_by_query, kk, index.meta)
-
-    # per-(query, block) upper bounds — metadata only, payloads pruned
+    # candidate terms
     idf_fan = spark.createDataFrame(
         [
             (qid, t, w)
@@ -356,76 +346,13 @@ def wand_topk_batch(
         ],
         "query_id string, term string, idf double",
     )
-    ub_df = (
-        cand.join(F.broadcast(idf_fan), "term")
-        .groupBy("query_id", "block_id")
-        .agg(
-            F.sum(F.col("idf") * _bound_wtf(index.meta)).alias("ub"),
-            F.sum("block_df").alias("cand_count"),
-        )
-        .localCheckpoint()
-    )
-
-    # bounded per-query seed selection (|Q| * seed_factor * k rows)
-    w_seed = Window.partitionBy("query_id").orderBy(
-        F.desc("ub"), F.asc("block_id")
-    )
-    seed_rows = (
-        ub_df.withColumn("rn", F.row_number().over(w_seed))
-        .filter(F.col("rn") <= seed_factor * kk)
-        .collect()
-    )
-    seed_pairs = [
-        (r["query_id"], r["block_id"])
-        for r in _seed_cover(
-            sorted(seed_rows, key=lambda r: (r["query_id"], r["rn"])),
-            seed_factor * kk,
-            query_of=lambda r: r["query_id"],
-        )
-    ]
-    seed_pair_df = spark.createDataFrame(
-        seed_pairs, "query_id string, block_id long"
-    )
-    seed_scores = (
-        cand_q.join(F.broadcast(seed_pair_df), ["query_id", "block_id"], "semi")
-        .groupBy("query_id", "block_id")
-        .applyInPandas(scorer, schema=_BATCH_SCORE_SCHEMA)
-    )
-    w_q = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    seed_top = (
-        seed_scores.withColumn("rn", F.row_number().over(w_q))
-        .filter(F.col("rn") <= kk)
-        .collect()
-    )
-    seed_df = spark.createDataFrame(
-        [(r["query_id"], r["doc_id"], r["score"]) for r in seed_top],
-        _BATCH_SCORE_SCHEMA,
-    )
-    # per-query pruning floor (-inf for queries whose seeds fell short of k)
-    pages = {qid: [] for qid in idfs_by_query}
-    for r in seed_top:
-        pages[r["query_id"]].append(r)
-    floor_df = spark.createDataFrame(
-        [(qid, _prune_floor(page, kk)) for qid, page in pages.items()],
-        "query_id string, floor double",
-    )
-
-    survivors = (
-        ub_df.join(F.broadcast(seed_pair_df), ["query_id", "block_id"], "anti")
-        .join(F.broadcast(floor_df), "query_id")
-        .filter(F.col("ub") >= F.col("floor"))
-        .select("query_id", "block_id")
-    )
-    rest = (
-        cand_q.join(F.broadcast(survivors), ["query_id", "block_id"], "semi")
-        .groupBy("query_id", "block_id")
-        .applyInPandas(scorer, schema=_BATCH_SCORE_SCHEMA)
-    )
+    cand_q = _candidates(index, idf_all).join(F.broadcast(idf_fan), "term")
+    scored = _one_pass(cand_q, F.col("idf"), ("query_id", "block_id"),
+                       idfs_by_query.__getitem__, kk, index.meta,
+                       _BATCH_SCORE_SCHEMA)
+    w_q = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        seed_df.unionByName(rest)
-        .withColumn("rn", F.row_number().over(w_q))
+        scored.withColumn("rn", F.row_number().over(w_q))
         .filter(F.col("rn") <= kk)
         .drop("rn")
     )
