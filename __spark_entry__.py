@@ -842,20 +842,25 @@ def _bpe_chain_cte(n_rounds: int) -> str:
     chr(31) sym chr(30) per symbol — so a merge is ONE literal
     ``replace()``, whose left-to-right non-overlapping semantics match
     the engine's merge loop exactly (tsidx/bpe.py _merge_batch_fn /
-    _train_bpe_driver). Early stop: m{i} is empty below BPE_MIN_PAIR and
-    the emptiness cascades through the cross joins, like the engine's
-    break."""
+    _train_bpe_driver). Early stop: m{i} is empty below BPE_MIN_PAIR, like
+    the engine's break; v{i} then carries v{i-1} over unchanged, so every
+    later round sees the same pair counts (its m stays empty) and
+    v{n_rounds} holds the segmentation of the last round that ran — the
+    merge table the engine segments with. Each v{i} feeds both p{i+1} and
+    v{i+1}, so the chain is MATERIALIZED: inlined, each reference
+    re-expands the chain below it (tens of seconds even on a three-doc
+    table)."""
     syms = (
         "regexp_extract_all(s, chr(31) || '([^' || chr(30) || ']+)' "
         "|| chr(30), 1)"
     )
-    sql = f"""w AS (
+    sql = f"""w AS MATERIALIZED (
   SELECT word, count(*)::BIGINT AS n FROM (
     SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
     FROM documents
   ) WHERE word <> '' GROUP BY word
 ),
-v0 AS (
+v0 AS MATERIALIZED (
   SELECT word, n,
          chr(31) || array_to_string(regexp_split_to_array(word, ''),
                                     chr(30) || chr(31))
@@ -865,23 +870,24 @@ v0 AS (
     for i in range(1, n_rounds + 1):
         p = i - 1
         sql += f""",
-p{i} AS (
+p{i} AS MATERIALIZED (
   SELECT syms[j] AS a, syms[j + 1] AS b, sum(n)::BIGINT AS cnt
   FROM (SELECT n, {syms} AS syms FROM v{p}),
        unnest(range(1, greatest(len(syms), 1))) AS u(j)
   WHERE j < len(syms)
   GROUP BY 1, 2
 ),
-m{i} AS (
+m{i} AS MATERIALIZED (
   SELECT a, b, cnt FROM p{i} WHERE cnt >= {BPE_MIN_PAIR}
   ORDER BY cnt DESC, a, b LIMIT 1
 ),
-v{i} AS (
+v{i} AS MATERIALIZED (
   SELECT v.word, v.n,
+         CASE WHEN m.a IS NULL THEN v.s ELSE
          replace(v.s,
                  chr(31) || m.a || chr(30) || chr(31) || m.b || chr(30),
-                 chr(31) || m.a || m.b || chr(30)) AS s
-  FROM v{p} v CROSS JOIN m{i} m
+                 chr(31) || m.a || m.b || chr(30)) END AS s
+  FROM v{p} v LEFT JOIN m{i} m ON true
 )"""
     return sql
 

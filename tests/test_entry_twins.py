@@ -80,3 +80,37 @@ def test_sdm_twin_repeated_bigram_multiplicity(spark, entry):
     assert got.keys() == want.keys()
     for d in want:
         assert _norm(got[d]) == _norm(want[d]), d
+
+
+def test_bpe_token_counts_twin_after_early_stop(spark, entry):
+    """When training stops early (a round's best pair is below
+    BPE_MIN_PAIR), the engine segments with the shorter merge table; the
+    twin must segment with the last round that ran. Before the fix the
+    empty round cascaded and the twin reported 0 words for every doc."""
+    import duckdb
+
+    from tsidx.bpe import bpe_segment, train_bpe
+
+    texts = ["ab ab", "ab cd", "ef"]  # one merge (a, b</w>), then stop
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    merges = train_bpe(docs, entry.BPE_MERGES)
+    assert 0 < len(merges) < entry.BPE_MERGES
+    want = {
+        r["doc_id"]: (r["n_words"], r["n_pieces"])
+        for r in bpe_segment(docs, merges).collect()
+    }
+    assert want == {0: (2, 2), 1: (2, 3), 2: (1, 2)}
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM (VALUES "
+        + ", ".join(f"({i}::BIGINT, '{t}')" for i, t in enumerate(texts))
+        + ") AS t(doc_id, text)"
+    )
+    got = {
+        int(d): (w, p)
+        for d, w, p in con.execute(entry._bpe_token_counts_sql()).fetchall()
+    }
+    assert got == want

@@ -20,9 +20,12 @@ Capabilities mirror the reference library ``retaildevcrews/ts_type_filter``
   validator semantics of the reference) (`tsidx.filter_parity`).
 """
 
+from tsidx.ship import worker_init
 from tsidx.porter2 import stem  # noqa: F401
 from tsidx.tokenize import break_on_whitespace, stem_tokens, term_freqs  # noqa: F401
 from tsidx.oracle import OracleIndex  # noqa: F401
+
+worker_init()  # no-op outside a PySpark task (see tsidx/ship.py)
 
 __all__ = [
     "stem",
